@@ -21,9 +21,14 @@ import org.apache.spark.storage.StorageLevel
  * }}}
  *
  * Without it the caches accumulate MEMORY_AND_DISK entries until Spark's
- * LRU eviction churns — correct but wasteful. `clearAll` is safe at any
- * point: unpersisting only drops the cached blocks; any later reuse
- * recomputes from lineage.
+ * LRU eviction churns — correct but wasteful. For [[cache]]d frames
+ * `clearAll` is safe at any point: unpersisting only drops the cached
+ * blocks, and any later reuse recomputes from lineage. NOT so for
+ * [[checkpointCut]] frames in the default `local` mode: the unpersisted
+ * localCheckpoint blocks are the only copy (their lineage was cut), so a
+ * frame whose plan embeds one fails on reuse after `clearAll()` or scope
+ * exit. Consume such frames fully before reclaiming them, or use the
+ * `reliable`/`persist` cut modes when reuse after a clear is expected.
  *
  * CONCURRENCY CAVEAT: the registry is process-global, so `clearAll()`
  * from one job unpersists frames a CONCURRENT job is still acting on —

@@ -64,7 +64,7 @@ object StreamDemo {
 
     // ---- live shelve expiration (README 5s scenario, shortened) ---------
     val ovIn = MemoryStream[OverrideRecord]
-    val exq = StreamRules.expirationTimers(ovIn.toDS(), OverrideType.Shelved)
+    val exq = StreamRules.expirationTimers(ovIn.toDS(), Set(OverrideType.Shelved))
       .writeStream.format("memory").queryName("expired").outputMode("append")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("demo").toString)

@@ -21,6 +21,20 @@ import graft.streaming.{OverrideRecord, StreamRules}
  * the reads for `readStream.format("kafka")` + ConfluentFraming/AlarmAvro
  * is the Kafka deployment — the kafka connector jar is not on this
  * classpath so the file edge is the testable default).
+ *
+ * Topology: three queries. `fk` (instances -> fk-routed) and `reg`
+ * (classes + fk-routed -> intermediate-registration) are the registration
+ * stages. `main` reads three sources — intermediate-registration,
+ * activations and ONE overrides source shared by the chain and the expiry
+ * branch — through two state operators: the unified chain and one T8/T9
+ * expiry operator keyed by (name, overrideType). Micro-batch latency here
+ * is set by per-trigger fixed cost, not by records, so every source,
+ * operator and state store counts. For the same reason [[start]] pins
+ * `spark.sql.sources.parallelPartitionDiscovery.threshold` on the session
+ * it is given: a trigger's new files are statted in-process instead of
+ * by a Spark listing job. Checkpoints written before the overrides source
+ * and the expiry operators were merged cannot be resumed (the source and
+ * state-operator counts differ); start such an app on a fresh checkpoint.
  */
 object AlarmProcessorApp {
 
@@ -136,8 +150,12 @@ object AlarmProcessorApp {
       .start()
   }
 
-  /** Build the unified input union for the main chain. */
-  private def unifiedInputs(spark: SparkSession, paths: Paths): org.apache.spark.sql.Dataset[AlarmInput] = {
+  /**
+   * Build the unified input union for the main chain. `overrides` is the
+   * raw overrides changelog stream, shared with the expiry branch.
+   */
+  private def unifiedInputs(spark: SparkSession, paths: Paths,
+      overrides: DataFrame): org.apache.spark.sql.Dataset[AlarmInput] = {
     import spark.implicits._
 
     // Registrations arrive pre-enriched from the registration stages (so
@@ -151,10 +169,8 @@ object AlarmProcessorApp {
     val activations = wellFormed(spark.readStream.schema(activationSchema).json(paths.activations))
       .as[ActivationRow].map(_.toInput)
 
-    val overrides = wellFormed(spark.readStream.schema(overrideSchema).json(paths.overrides))
-      .as[OverrideRow].map(_.toInput)
-
-    instances.union(activations).union(overrides)
+    instances.union(activations)
+      .union(wellFormed(overrides).as[OverrideRow].map(_.toInput))
   }
 
   /** Start the app: two registration stages + the unified chain. */
@@ -162,27 +178,41 @@ object AlarmProcessorApp {
       trigger: Trigger = Trigger.ProcessingTime("500 milliseconds")): RunningApp = {
     import spark.implicits._
     paths.mkdirs()
+    // Every changelog write is its own tiny file, so one trigger routinely
+    // picks up more than the default 32 new files. Above this threshold
+    // FileStreamSource.getBatch lists them with a Spark job (one task per
+    // file, each deserializing the whole Hadoop Configuration): ~1 s of a
+    // paced trigger, against tens of ms to stat the same files
+    // in-process. The source reads the conf from this session on every batch,
+    // so the setting stays for the session's lifetime.
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
+      Int.MaxValue.toString)
 
     val fkQ = startFkQuery(spark, paths, trigger)
     val regQ = startRegQuery(spark, paths, trigger)
+
+    // ONE overrides source feeds both the chain and the expiry branch, so
+    // each overrides file is listed, logged and parsed once per trigger.
+    val overrides = spark.readStream.schema(overrideSchema).json(paths.overrides)
 
     // GRAFT_STATE_API=tws runs the chain on transformWithState (state v2,
     // RocksDB required); default is the FMGWS form. Same step fold either way.
     val chainOut =
       if (sys.env.get("GRAFT_STATE_API").contains("tws"))
-        UnifiedAlarmRule.runTws(unifiedInputs(spark, paths))
-      else UnifiedAlarmRule.run(unifiedInputs(spark, paths))
+        UnifiedAlarmRule.runTws(unifiedInputs(spark, paths, overrides))
+      else UnifiedAlarmRule.run(unifiedInputs(spark, paths, overrides))
 
-    // T8/T9 expiration branch: overrides stream -> processing-time timers ->
-    // tombstone emissions, unioned into the same sink/feedback path.
-    val overrideRecords = spark.readStream.schema(overrideSchema).json(paths.overrides)
+    // T8/T9 expiration branch: overrides stream -> processing-time timers
+    // (one operator for both types) -> tombstone emissions, unioned into
+    // the same sink/feedback path.
+    val overrideRecords = overrides
       .filter(col("seq").isNotNull && col("name").isNotNull && col("overrideType").isNotNull)
       .select(col("seq"), col("name"), col("overrideType"),
         col("oneshot"), col("expiration"), col("reason"),
         coalesce(col("tombstone"), lit(false)).as("tombstone"))
       .as[OverrideRecord]
-    val expiries = StreamRules.expirationTimers(overrideRecords, graft.model.OverrideType.Shelved)
-      .union(StreamRules.expirationTimers(overrideRecords, graft.model.OverrideType.OnDelayed))
+    val expiries = StreamRules.expirationTimers(overrideRecords,
+      Set(graft.model.OverrideType.Shelved, graft.model.OverrideType.OnDelayed))
       .map(e => ChainOutput(None, Some(e)))
 
     val mainQ = chainOut.union(expiries).writeStream

@@ -374,8 +374,14 @@ object BinFamily {
             maxShardExcl = b + shardsPerEpoch)
       }
       val inFlight = math.min(group.size, maxConcurrent(spark))
-      if (inFlight == 1) group.indices.foreach(exportOne)
-      else {
+      if (inFlight == 1) {
+        // Serial exports label jobs on the CALLER's thread: hand its own
+        // description back afterwards (null clears the property again).
+        val sc = spark.sparkContext
+        val callerDescription = sc.getLocalProperty("spark.job.description")
+        try group.indices.foreach(exportOne)
+        finally sc.setJobDescription(callerDescription)
+      } else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(inFlight)
         try {
           val futures = group.indices.map { i =>

@@ -310,22 +310,29 @@ object StreamRules {
 
   /**
    * T8/T9 expiration timers (`ShelveExpirationRule.java:93-191`,
-   * `OnDelayExpirationRule.java:99-204`): for each override of
-   * `expiringType`, (re)arm a processing-time timer at its expiration;
-   * on fire, emit a tombstone back to the overrides changelog. Replaces the
-   * reference's in-memory ConcurrentHashMap timer registry with
-   * fault-tolerant checkpointed state.
+   * `OnDelayExpirationRule.java:99-204`): for each override whose type is
+   * in `expiringTypes`, (re)arm a processing-time timer at its expiration;
+   * on fire, emit a tombstone of that type back to the overrides
+   * changelog. Replaces the reference's in-memory ConcurrentHashMap timer
+   * registry with fault-tolerant checkpointed state.
+   *
+   * One operator serves every type: state is keyed by (name, type), so a
+   * Shelved and an OnDelayed timer on the same alarm arm, re-arm and fire
+   * independently — exactly as two single-type operators would — while a
+   * micro-batch commits one operator's state stores instead of one set per
+   * type.
    */
   def expirationTimers(
       ds: Dataset[OverrideRecord],
-      expiringType: String): Dataset[OverrideEmission] = {
+      expiringTypes: Set[String]): Dataset[OverrideEmission] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.filter(_.overrideType == expiringType)
-      .groupByKey(_.name)
+    ds.filter(r => expiringTypes.contains(r.overrideType))
+      .groupByKey(r => (r.name, r.overrideType))
       .flatMapGroupsWithState[ExpiryState, OverrideEmission](
         OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (name, records, state: GroupState[ExpiryState]) =>
+        (key, records, state: GroupState[ExpiryState]) =>
+          val (name, expiringType) = key
           if (state.hasTimedOut) {
             state.remove()
             Iterator.single(OverrideEmission(name, expiringType, None))

@@ -280,6 +280,20 @@ class BinFamilySpec extends AnyFunSuite {
       compactEvery = 2) == -1L)
   }
 
+  test("appendEpochs exporting serially leaves the caller's job description as it was") {
+    val sc = spark.sparkContext
+    val root = Files.createTempDirectory("binfam-desc-").toString
+    // one epoch per group -> the export runs on this thread
+    sc.setJobDescription("caller label")
+    try {
+      assert(BinFamily.appendEpochs(Seq("e0" -> pack(0)), root, budget, span) >= 0L)
+      assert(sc.getLocalProperty("spark.job.description") == "caller label")
+    } finally sc.setJobDescription(null)
+    assert(BinFamily.appendEpochs(Seq("e1" -> pack(1)), root, budget, span) >= 0L)
+    assert(sc.getLocalProperty("spark.job.description") == null,
+      "no description must be left behind when the caller had none")
+  }
+
   test("repackSequences validates the packed invariant loud") {
     val bad = Seq((0L, 0L, Array(1, 2), 2L), (0L, 1L, Array(3, 4, 5), 3L))
       .toDF("shard", "seq", "ids", "n_ids") // non-final short at budget 3

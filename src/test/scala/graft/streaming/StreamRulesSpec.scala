@@ -196,8 +196,9 @@ class StreamRulesSpec extends AnyFunSuite {
   // timeout checks keep scheduling micro-batches so "all available" never
   // settles (livelock). Poll the memory sink with a deadline instead.
 
-  private def startExpiryQuery(ms: MemoryStream[OverrideRecord], qn: String) =
-    StreamRules.expirationTimers(ms.toDS(), OverrideType.Shelved)
+  private def startExpiryQuery(ms: MemoryStream[OverrideRecord], qn: String,
+      types: Set[String] = Set(OverrideType.Shelved)) =
+    StreamRules.expirationTimers(ms.toDS(), types)
       .writeStream.format("memory").queryName(qn).outputMode("append")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graftck").toString)
@@ -242,6 +243,44 @@ class StreamRulesSpec extends AnyFunSuite {
       // wait well past the would-be expiry; nothing must fire
       val n = pollCount(qn, _ > 0, 9000)
       assert(n == 0)
+    } finally q.stop()
+  }
+
+  test("expirationTimers: Shelved and OnDelayed timers on one alarm fire independently") {
+    implicit val sq = spark.sqlContext
+    val ms = MemoryStream[OverrideRecord]
+    val qn = s"exp${ids.incrementAndGet()}"
+    val q = startExpiryQuery(ms, qn, Set(OverrideType.Shelved, OverrideType.OnDelayed))
+    try {
+      val t0 = System.currentTimeMillis()
+      ms.addData(Seq(
+        OverrideRecord(1, "a", OverrideType.Shelved,
+          oneshot = Some(false), expiration = Some(t0 + 5000)),
+        OverrideRecord(2, "a", OverrideType.OnDelayed, expiration = Some(t0 + 6000))))
+      // wait for the batch that arms both timers before re-arming one
+      val armDeadline = t0 + 4000
+      while (!q.recentProgress.exists(_.numInputRows > 0) &&
+          System.currentTimeMillis() < armDeadline) Thread.sleep(100)
+      assert(q.recentProgress.exists(_.numInputRows > 0), "arm batch did not run")
+      // a new Shelved record moves the shelve timer past the OnDelayed one
+      ms.addData(Seq(OverrideRecord(3, "a", OverrideType.Shelved,
+        oneshot = Some(false), expiration = Some(t0 + 12000))))
+
+      assert(pollCount(qn, _ > 0, 45000) >= 1)
+      val firstAt = System.currentTimeMillis() - t0
+      val first = spark.table(qn).as[OverrideEmission].collect().toSeq
+      // the OnDelayed timer fired on its own schedule; the re-armed
+      // shelve timer fired neither at its old (5 s) nor yet at its new
+      // (12 s) time
+      assert(first == Seq(OverrideEmission("a", OverrideType.OnDelayed, None)),
+        s"after $firstAt ms: $first")
+
+      assert(pollCount(qn, _ > 1, 45000) == 2)
+      assert(System.currentTimeMillis() - t0 >= 12000)
+      val fired = spark.table(qn).as[OverrideEmission].collect().toSeq
+      assert(fired == Seq(
+        OverrideEmission("a", OverrideType.OnDelayed, None),
+        OverrideEmission("a", OverrideType.Shelved, None)))
     } finally q.stop()
   }
 
